@@ -314,9 +314,8 @@ def main(
         print(f"normalized {n} events -> {args.dest}")
         return 0
     if args.cmd == "export-shards":
-        from pyspark.sql import functions as F
-
         from cardano_spark.functions.hashing import md5_long
+        from cardano_spark.functions.scalars import sql_ident
         from cardano_spark.sinks.shards import (
             write_training_shards,
             write_training_shards_incremental,
@@ -346,7 +345,7 @@ def main(
             return 0
         df = spark.read.parquet(args.src).withColumn(
             "_shard_key",
-            md5_long(F.concat(F.lit("shard|"), F.col(args.key).cast("string"))),
+            md5_long(f"concat('shard|', CAST({sql_ident(args.key)} AS STRING))"),
         )
         m = write_training_shards(
             df, args.dest, "_shard_key", args.shards,

@@ -236,13 +236,3 @@ def normalize_events(
     df = _read_events(spark, src).observe(obs, F.count(F.lit(1)).alias("n"))
     df.write.mode("overwrite").parquet(dest)
     return int(obs.get["n"])
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for the SQL surface."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

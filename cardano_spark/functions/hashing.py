@@ -13,6 +13,11 @@ hyperplanes) are minted once at import time from a seeded
 platform-stable, so Spark expressions and generated oracle SQL see
 the same literals.
 
+One rule for every primitive that has a SQL-text form: ``*_sexpr`` is
+its Spark definition, ``*_sql`` is the independent DuckDB oracle text,
+and the Column function of the same name is ``F.expr`` over the former
+(one expression costs 3 py4j round trips to build, whatever its size).
+
 Scale notes: all of these are pure column expressions — JVM-side,
 whole-stage-codegen'd, no Python UDFs, no shuffle by themselves.
 """
@@ -77,10 +82,10 @@ def shl1(nbits: Column) -> Column:
     return F.call_function("shiftleft", F.lit(1).cast("long"), nbits.cast("int"))
 
 
-def md5_long(col: Column) -> Column:
+def md5_long_sexpr(expr: str) -> str:
     """String -> 60-bit positive int64 via the first 15 hex chars of
-    md5. Oracle twin: ``('0x' || substr(md5(x),1,15))::BIGINT``."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+    md5."""
+    return f"CAST(conv(substring(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
 
 
 def md5_long_sql(expr: str) -> str:
@@ -88,19 +93,16 @@ def md5_long_sql(expr: str) -> str:
     return f"('0x' || substr(md5({expr}), 1, 15))::BIGINT"
 
 
-def md5_long_sexpr(expr: str) -> str:
-    """SPARK-SQL text twin of :func:`md5_long` (driver-latency fast
-    path — one ``F.expr`` instead of per-operator py4j round trips;
-    see operators/similarity.py's ``*_sexpr`` family)."""
-    return f"CAST(conv(substring(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
+def md5_long(expr: str) -> Column:
+    return F.expr(md5_long_sexpr(expr))
 
 
-def minhash_sig(hashes: Column, a: int, b: int) -> Column:
+def minhash_sig_sexpr(hashes_expr: str, a: int, b: int) -> str:
     """One MinHash signature value: min over the shingle-hash array of
     the permuted hash (a*(h%P)+b)%P."""
-    p = F.lit(POLY_MOD)
-    return F.array_min(
-        F.transform(hashes, lambda h: (F.lit(a) * (h % p) + F.lit(b)) % p)
+    return (
+        f"array_min(transform({hashes_expr}, "
+        f"h -> ({a} * (h % {POLY_MOD}) + {b}) % {POLY_MOD}))"
     )
 
 
@@ -112,12 +114,8 @@ def minhash_sig_sql(hashes_expr: str, a: int, b: int) -> str:
     )
 
 
-def minhash_sig_sexpr(hashes_expr: str, a: int, b: int) -> str:
-    """SPARK-SQL text twin of :func:`minhash_sig`."""
-    return (
-        f"array_min(transform({hashes_expr}, "
-        f"h -> ({a} * (h % {POLY_MOD}) + {b}) % {POLY_MOD}))"
-    )
+def minhash_sig(hashes_expr: str, a: int, b: int) -> Column:
+    return F.expr(minhash_sig_sexpr(hashes_expr, a, b))
 
 
 def fold_sum(arr: Column, zero: Column) -> Column:
@@ -152,7 +150,7 @@ def rolling_fingerprint_sql(hashes_expr: str) -> str:
     )
 
 
-def hash_bucket(col: Column, n_buckets: int, salt: str = "split") -> Column:
+def hash_bucket_sexpr(expr: str, n_buckets: int, salt: str = "split") -> str:
     """Deterministic content-hash bucket in [0, n_buckets): the
     primitive for reproducible train/val/test splits and hash-based
     sampling. Unlike ``rand()`` / ``TABLESAMPLE``, the assignment is a
@@ -160,10 +158,16 @@ def hash_bucket(col: Column, n_buckets: int, salt: str = "split") -> Column:
     and repartitioning — the same properties that forced sha2
     surrogate ids over uuid4 (SURVEY §7). The salt decorrelates
     independent splits over the same keys."""
-    return md5_long(F.concat(F.lit(salt + "|"), col.cast("string"))) % F.lit(n_buckets)
+    lit = salt.replace("\\", "\\\\").replace("'", "\\'")
+    keyed = f"concat('{lit}|', CAST({expr} AS STRING))"
+    return f"{md5_long_sexpr(keyed)} % {n_buckets}"
 
 
 def hash_bucket_sql(expr: str, n_buckets: int, salt: str = "split") -> str:
     """DuckDB text twin of :func:`hash_bucket`."""
     keyed = f"'{salt}|' || ({expr})::VARCHAR"
     return f"{md5_long_sql(keyed)} % {n_buckets}"
+
+
+def hash_bucket(expr: str, n_buckets: int, salt: str = "split") -> Column:
+    return F.expr(hash_bucket_sexpr(expr, n_buckets, salt))

@@ -1,10 +1,11 @@
 """Text-analysis column expressions for the training-data pipeline
 (language-ID, quality scoring, token counting, shingling).
 
-All JVM-side built-ins — no Python UDFs in any hot path. Each Spark
-expression has a DuckDB text twin (``*_sql``) used by the
-correctness oracles; the two are kept adjacent so they evolve in
-lockstep.
+All JVM-side built-ins — no Python UDFs in any hot path. One rule
+for every primitive that has a SQL-text form: ``*_sexpr`` is its Spark
+definition, ``*_sql`` is the independent DuckDB oracle text, and the
+Column function of the same name is ``F.expr`` over the former (one
+expression costs 3 py4j round trips to build, whatever its size).
 
 Determinism: token sets are ``array_distinct`` of a plain
 whitespace split (identical semantics both engines); all ratios are
@@ -36,33 +37,30 @@ STOPWORDS: dict[str, list[str]] = {
 LANGS = sorted(STOPWORDS)
 
 
-def tokens(text: Column) -> Column:
+def tokens_sexpr(expr: str) -> str:
     """Whitespace tokens (with multiplicity)."""
-    return F.split(text, " ")
+    return f"split({expr}, ' ')"
 
 
 def tokens_sql(expr: str) -> str:
     return f"string_split({expr}, ' ')"
 
 
-def distinct_tokens(text: Column) -> Column:
+def tokens(expr: str) -> Column:
+    return F.expr(tokens_sexpr(expr))
+
+
+def distinct_tokens_sexpr(expr: str) -> str:
     """Unigram shingle set."""
-    return F.array_distinct(F.split(text, " "))
+    return f"array_distinct(split({expr}, ' '))"
 
 
 def distinct_tokens_sql(expr: str) -> str:
     return f"list_distinct(string_split({expr}, ' '))"
 
 
-def tokens_sexpr(expr: str) -> str:
-    """SPARK-SQL text twin of :func:`tokens` (driver-latency fast
-    path; the ``*_sexpr`` convention of operators/similarity.py)."""
-    return f"split({expr}, ' ')"
-
-
-def distinct_tokens_sexpr(expr: str) -> str:
-    """SPARK-SQL text twin of :func:`distinct_tokens`."""
-    return f"array_distinct(split({expr}, ' '))"
+def distinct_tokens(expr: str) -> Column:
+    return F.expr(distinct_tokens_sexpr(expr))
 
 
 def ngram_shingles(text: Column, n: int) -> Column:
@@ -116,10 +114,10 @@ def word_ngrams_sql(expr: str, n: int) -> str:
     )
 
 
-def stopword_hits(toks: Column, lang: str) -> Column:
+def stopword_hits_sexpr(toks_expr: str, lang: str) -> str:
     """How many tokens (with multiplicity) are stopwords of ``lang``."""
-    words = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    return F.size(F.filter(toks, lambda t: F.array_contains(words, t)))
+    lit = "array(" + ", ".join(f"'{w}'" for w in STOPWORDS[lang]) + ")"
+    return f"size(filter({toks_expr}, t -> array_contains({lit}, t)))"
 
 
 def stopword_hits_sql(toks_expr: str, lang: str) -> str:
@@ -127,10 +125,8 @@ def stopword_hits_sql(toks_expr: str, lang: str) -> str:
     return f"len(list_filter({toks_expr}, t -> list_contains({lit}, t)))"
 
 
-def stopword_hits_sexpr(toks_expr: str, lang: str) -> str:
-    """SPARK-SQL text twin of :func:`stopword_hits`."""
-    lit = "array(" + ", ".join(f"'{w}'" for w in STOPWORDS[lang]) + ")"
-    return f"size(filter({toks_expr}, t -> array_contains({lit}, t)))"
+def stopword_hits(toks_expr: str, lang: str) -> Column:
+    return F.expr(stopword_hits_sexpr(toks_expr, lang))
 
 
 def token_count_regex(text: Column) -> Column:
@@ -142,32 +138,41 @@ def token_count_regex_sql(expr: str) -> str:
     return f"len(regexp_extract_all({expr}, '{TOKEN_RE}'))"
 
 
-def punct_count(text: Column) -> Column:
+def punct_count_sexpr(expr: str) -> str:
     """Characters outside [a-z0-9 ] — for the synthetic corpus these
     are punctuation plus non-Latin script."""
-    return F.length(F.regexp_replace(text, "[a-z0-9 ]", ""))
+    return f"length(regexp_replace({expr}, '[a-z0-9 ]', ''))"
 
 
 def punct_count_sql(expr: str) -> str:
     return f"length(regexp_replace({expr}, '[a-z0-9 ]', '', 'g'))"
 
 
-def quality_score(text: Column) -> Column:
+def punct_count(expr: str) -> Column:
+    return F.expr(punct_count_sexpr(expr))
+
+
+def quality_score_sexpr(expr: str) -> str:
     """The fixed-order document quality formula (q30 and the corpus
     build pipeline share this ONE definition):
     0.5*stopword_ratio + 0.3*len_score + 0.2*(1 - punct_ratio)."""
-    toks = tokens(text)
-    n_tok = F.size(toks).cast("long")
-    n_chars = F.length(text).cast("long")
-    stop_ratio = stopword_hits(toks, "en").cast("long").cast("double") / n_tok.cast(
-        "double"
+    toks = tokens_sexpr(expr)
+    n_tok = f"CAST(size({toks}) AS BIGINT)"
+    n_chars = f"CAST(length({expr}) AS BIGINT)"
+    stop_ratio = (
+        f"CAST(CAST({stopword_hits_sexpr(toks, 'en')} AS BIGINT) AS DOUBLE)"
+        f" / CAST({n_tok} AS DOUBLE)"
     )
-    len_score = F.least(n_tok, F.lit(100)).cast("double") / F.lit(100.0)
-    punct_ratio = punct_count(text).cast("long").cast("double") / n_chars.cast(
-        "double"
+    len_score = f"CAST(least({n_tok}, 100) AS DOUBLE) / 100.0D"
+    punct_ratio = (
+        f"CAST(CAST({punct_count_sexpr(expr)} AS BIGINT) AS DOUBLE)"
+        f" / CAST({n_chars} AS DOUBLE)"
     )
     return (
-        F.lit(0.5) * stop_ratio
-        + F.lit(0.3) * len_score
-        + F.lit(0.2) * (F.lit(1.0) - punct_ratio)
+        f"0.5D * ({stop_ratio}) + 0.3D * ({len_score})"
+        f" + 0.2D * (1.0D - ({punct_ratio}))"
     )
+
+
+def quality_score(expr: str) -> Column:
+    return F.expr(quality_score_sexpr(expr))

@@ -625,10 +625,10 @@ def dsir_scores(
     b_of = lambda c: hash_bucket(c, n_buckets, salt="dsir")  # noqa: E731
     tgt = target.select(
         F.explode(F.array_distinct(target_shingles)).alias("_s")
-    ).select(b_of(F.col("_s")).alias("_b"))
+    ).select(b_of("_s").alias("_b"))
     raw = docs.select(
         F.col(id_col), F.explode_outer(F.array_distinct(shingles)).alias("_s")
-    ).select(id_col, b_of(F.col("_s")).alias("_b"))
+    ).select(id_col, b_of("_s").alias("_b"))
     t_hist = tgt.groupBy("_b").agg(F.count("*").alias("_t"))
     r_hist = raw.filter(F.col("_b").isNotNull()).groupBy("_b").agg(
         F.count("*").alias("_r")
@@ -1322,7 +1322,7 @@ def linear_model_scores(
         ).alias("_t"),
     )
     tb = toks.select(
-        F.col(id_col), hash_bucket(F.col("_t"), n_buckets, salt).alias("bucket")
+        F.col(id_col), hash_bucket("_t", n_buckets, salt).alias("bucket")
     )
     return (
         tb.join(F.broadcast(weights), "bucket")

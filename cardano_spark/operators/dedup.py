@@ -30,9 +30,7 @@ from cardano_spark.functions.hashing import (
     LSH_ROWS,
     MINHASH_PERMS,
     SIMHASH_BITS,
-    md5_long,
     md5_long_sexpr,
-    minhash_sig,
     minhash_sig_sexpr,
 )
 from cardano_spark.functions.scalars import sql_ident
@@ -122,10 +120,8 @@ def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def jaccard_sexpr(a: str, b: str) -> str:
-    """SQL-text twin of :func:`jaccard` (driver-latency fast path,
-    guide §1/§5). The intersection size appears twice exactly as the
-    Column form expands it (a reused Column object duplicates its
-    subtree in the Catalyst tree the same way)."""
+    """Exact Jaccard over two distinct-element arrays: one integer
+    intersection count, one IEEE division — deterministic everywhere."""
     inter = f"size(array_intersect({a}, {b}))"
     return (
         f"CAST({inter} AS DOUBLE) / "
@@ -133,36 +129,8 @@ def jaccard_sexpr(a: str, b: str) -> str:
     )
 
 
-def jaccard(a: Column | str, b: Column | str) -> Column:
-    """Exact Jaccard over two distinct-element arrays: one integer
-    intersection count, one IEEE division — deterministic everywhere.
-    String args take the one-``F.expr`` fast path."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(jaccard_sexpr(a, b))
-    inter = F.size(F.array_intersect(a, b))
-    union = F.size(a) + F.size(b) - inter
-    return inter.cast("double") / union.cast("double")
-
-
-def minhash_signature_cols(hashes: Column) -> list[Column]:
-    """The 16 MinHash signature values as columns sig0..sig15."""
-    return [
-        minhash_sig(hashes, a, b).alias(f"sig{j}")
-        for j, (a, b) in enumerate(MINHASH_PERMS)
-    ]
-
-
-def lsh_band_cols() -> list[Column]:
-    """Band bucket ids: md5 over the '|'-joined signature slice of
-    each band (LSH_BANDS bands x LSH_ROWS rows)."""
-    out = []
-    for band in range(LSH_BANDS):
-        sigs = [
-            F.col(f"sig{j}").cast("string")
-            for j in range(band * LSH_ROWS, (band + 1) * LSH_ROWS)
-        ]
-        out.append(F.md5(F.concat_ws("|", *sigs)).alias(f"band{band}"))
-    return out
+def jaccard(a: str, b: str) -> Column:
+    return F.expr(jaccard_sexpr(a, b))
 
 
 def _sig_frame(t: DataFrame) -> DataFrame:
@@ -299,7 +267,7 @@ def incremental_minhash_pairs(
         .select(
             "id_a",
             "id_b",
-            jaccard(F.col("sh_a"), F.col("sh_b")).alias("jaccard"),
+            jaccard("sh_a", "sh_b").alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
     )
@@ -465,15 +433,26 @@ def minhash_lsh_pairs(
     )
 
 
-def md5_long_arr(arr: Column) -> Column:
+def md5_long_arr_sexpr(arr: str) -> str:
     """Hash every array element to a 60-bit int (md5-based)."""
-    return F.transform(arr, md5_long)
+    return f"transform({arr}, x -> {md5_long_sexpr('x')})"
+
+
+def md5_long_arr(arr: str) -> Column:
+    return F.expr(md5_long_arr_sexpr(arr))
 
 
 def simhash_sexpr(hashes_expr: str) -> str:
-    """SPARK-SQL text twin of :func:`simhash` (one ``F.expr`` — the
-    nested-lambda Column build costs ~780 py4j round trips, guide §5
-    driver latency)."""
+    """SIMHASH_BITS-bit SimHash of a token-hash array: bit j is set
+    when more element hashes have bit j set than not.
+
+    Single-pass formulation: ONE fold over the hash array carrying a
+    SIMHASH_BITS-wide vote vector (nested higher-order lambdas --
+    zip_with inside aggregate), then one fold of the vote vector into
+    the fingerprint. The naive per-bit version (SIMHASH_BITS separate
+    ``aggregate`` calls) re-evaluates the element hashes once per bit
+    -- measured 5.6s vs ~0.6s on 5k docs at sf0.1. Integer votes are
+    identical either way, so the DuckDB oracle is unchanged."""
     powers = "array(" + ", ".join(f"{1 << j}L" for j in range(SIMHASH_BITS)) + ")"
     votes = (
         f"aggregate({hashes_expr}, "
@@ -490,46 +469,8 @@ def simhash_sexpr(hashes_expr: str) -> str:
     )
 
 
-def simhash(hashes: Column | str) -> Column:
-    """SIMHASH_BITS-bit SimHash of a token-hash array: bit j is set
-    when more element hashes have bit j set than not.
-
-    Single-pass formulation: ONE fold over the hash array carrying a
-    SIMHASH_BITS-wide vote vector (nested higher-order lambdas --
-    zip_with inside aggregate), then one fold of the vote vector into
-    the fingerprint. The naive per-bit version (SIMHASH_BITS separate
-    ``aggregate`` calls) re-evaluates the element hashes once per bit
-    -- measured 5.6s vs ~0.6s on 5k docs at sf0.1. Integer votes are
-    identical either way, so the DuckDB oracle is unchanged.
-
-    String input is SQL text (usually a column name) and takes the
-    one-``F.expr`` fast path."""
-    if isinstance(hashes, str):
-        return F.expr(simhash_sexpr(hashes))
-    powers = F.array(*[F.lit(1 << j).cast("long") for j in range(SIMHASH_BITS)])
-    votes = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0).cast("long"), SIMHASH_BITS),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.transform(
-                powers,
-                lambda p: F.when(
-                    h.bitwiseAND(p) != 0, F.lit(1).cast("long")
-                ).otherwise(F.lit(-1).cast("long")),
-            ),
-            lambda x, y: x + y,
-        ),
-    )
-    return F.aggregate(
-        F.zip_with(
-            votes,
-            powers,
-            lambda v, p: F.when(v > 0, p).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x,
-    )
+def simhash(hashes_expr: str) -> Column:
+    return F.expr(simhash_sexpr(hashes_expr))
 
 
 def simhash_band(fp: Column, k: int) -> Column:
@@ -679,8 +620,9 @@ def prefix_blocking_keys(
     distinct_tokens guarantee this); duplicates would inflate the
     position math.
     """
-    srt = F.array_sort(
-        F.transform(shingles, lambda s: F.struct(md5_long(s).alias("h"), s.alias("s")))
+    srt = F.expr(
+        f"array_sort(transform(_sh, s -> named_struct("
+        f"'h', {md5_long_sexpr('s')}, 's', s)))"
     )
     n = F.size(srt)
     p = (
@@ -692,8 +634,9 @@ def prefix_blocking_keys(
         df.select(
             F.col(id_col).alias("_id"),
             F.col(block_col).alias("_blk"),
-            F.explode(F.slice(srt, F.lit(1), p)).alias("_e"),
+            shingles.alias("_sh"),
         )
+        .select("_id", "_blk", F.explode(F.slice(srt, F.lit(1), p)).alias("_e"))
         .select("_id", "_blk", F.col("_e.h").alias("_pk"))
     )
 
@@ -710,7 +653,7 @@ def _overlap_counts(t: DataFrame) -> DataFrame:
         "_id",
         "_blk",
         F.size("_sh").alias("_n"),
-        F.explode(F.transform("_sh", md5_long)).alias("_h"),
+        F.explode(md5_long_arr("_sh")).alias("_h"),
     )
     # the exploded frame feeds BOTH self-join sides; without a cut
     # each side re-runs the scan + shingle Generate + md5 fold (the
@@ -911,7 +854,7 @@ def ngram_jaccard_pairs(
     return (
         cand.join(sh_a, "id_a")
         .join(sh_b, "id_b")
-        .select("id_a", "id_b", jaccard(F.col("sh_a"), F.col("sh_b")).alias("jaccard"))
+        .select("id_a", "id_b", jaccard("sh_a", "sh_b").alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -1175,7 +1118,7 @@ def minhash_estimate_report(
             "id_a",
             "id_b",
             _sig_agreement().alias("est_j"),
-            jaccard(F.col("sh_a"), F.col("sh_b")).alias("exact_j"),
+            jaccard("sh_a", "sh_b").alias("exact_j"),
         )
     )
     return scored.select(
@@ -1217,19 +1160,17 @@ def winnowing_fingerprints(
 
     Returns (``id_col``, ``pos``, ``fp``) — pos is the 1-based token
     position of the selected k-gram."""
-    from cardano_spark.functions.hashing import md5_long
-
-    toks = F.split(F.coalesce(F.col(text_col), F.lit("")), " ")
-    n_h = F.size(toks) - F.lit(k - 1)
-    hashes = F.transform(
-        F.sequence(F.lit(1), n_h),
-        lambda i: F.struct(
-            md5_long(F.concat_ws(" ", F.slice(toks, i, k))).alias("h"),
-            i.cast("long").alias("pos"),
-        ),
+    gram = md5_long_sexpr(f"concat_ws(' ', slice(_toks, i, {k}))")
+    n_h = F.size("_toks") - F.lit(k - 1)
+    hashes = F.expr(
+        f"transform(sequence(1, size(_toks) - {k - 1}), i -> named_struct("
+        f"'h', {gram}, 'pos', CAST(i AS BIGINT)))"
     )
     staged = docs.select(
         F.col(id_col),
+        F.split(F.coalesce(F.col(text_col), F.lit("")), " ").alias("_toks"),
+    ).select(
+        id_col,
         F.when(n_h >= 1, hashes)
         .otherwise(F.array().cast("array<struct<h:long,pos:long>>"))
         .alias("_hs"),
@@ -1461,25 +1402,23 @@ def cdc_paragraphs(
     quadratic without it).
 
     Returns (``id_col``, ``para_idx`` 1-based, ``para`` text)."""
-    toks = F.split(F.coalesce(F.col(text_col), F.lit("")), " ")
-    n = F.size(toks)
+    n = F.size("_t")
     # interior boundaries: hash of the w-token window ENDING at i.
     # sequence(w, n-1) is DESCENDING in Spark when n-1 < w — guard.
+    window = md5_long_sexpr(f"concat_ws(' ', slice(_t, i - {w - 1}, {w}))")
     interior = F.when(
         n - 1 >= w,
-        F.filter(
-            F.sequence(F.lit(w), n - 1),
-            lambda i: md5_long(
-                F.concat_ws(" ", F.slice(toks, i - F.lit(w - 1), w))
-            )
-            % m
-            == 0,
-        ),
+        F.expr(f"filter(sequence({w}, size(_t) - 1), i -> {window} % {m} = 0)"),
     ).otherwise(F.array().cast("array<int>"))
     cuts = F.concat(interior, F.array(n))
-    staged = docs.select(
-        F.col(id_col), toks.alias("_t"), cuts.alias("_cuts")
-    ).localCheckpoint(eager=False)
+    staged = (
+        docs.select(
+            F.col(id_col),
+            F.split(F.coalesce(F.col(text_col), F.lit("")), " ").alias("_t"),
+        )
+        .select(id_col, "_t", cuts.alias("_cuts"))
+        .localCheckpoint(eager=False)
+    )
     start = lambda j: F.when(j == 1, F.lit(1)).otherwise(  # noqa: E731
         F.element_at(F.col("_cuts"), (j - F.lit(1)).cast("int")) + 1
     )

@@ -12,7 +12,7 @@ Scale design:
   At 100 TB you'd additionally probe multi-bucket (flip one bit);
   the bucket assignment below is the deterministic core of that.
 - All float math is sequential-fold double arithmetic
-  (functions/hashing.fold_sum) so the DuckDB oracle reproduces
+  (:func:`dot_sexpr`) so the DuckDB oracle reproduces
   results bit-for-bit; float->double casts are exact.
 """
 
@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 from cardano_spark.functions.hashing import (
     HYPERPLANE_TABLES,
     HYPERPLANES,
-    fold_sum,
 )
 from cardano_spark.functions.scalars import sql_ident
 from cardano_spark.operators.skew import salted_join, spread_narrow_input
@@ -36,19 +35,15 @@ def as_double(vec: Column) -> Column:
     return vec.cast("array<double>")
 
 
-# --- Spark-SQL TEXT twins (driver-latency fast path, guide §5) -----
+# --- Expression primitives ------------------------------------------
 #
-# Building these expressions Column-op-by-Column-op costs one py4j
-# round trip per operator call — measured 86 (norm) / 101 (dot) /
-# 3893 (lsh_bucket) round trips at ~0.3-0.5 ms each, i.e. up to
-# ~1.7 s of pure driver latency PER lsh_bucket construction, paid on
-# every query build. The same expression as ONE ``F.expr`` SQL string
-# costs 3 round trips. The text builders below produce the exact same
-# Catalyst operators (aggregate/zip_with/transform with double
-# literals that round-trip bit-exactly via repr + the ``D`` suffix),
-# so results are unchanged — only construction latency moves. The
-# ``*_sexpr`` suffix = Spark-SQL text (the existing ``*_sql`` twins
-# in functions/hashing.py are DuckDB-dialect oracle text).
+# One rule: ``*_sexpr`` is the Spark definition (SQL text), the DuckDB
+# oracles restate it independently (``*_sql``), and the Column function
+# of the same name is ``F.expr`` over the ``*_sexpr`` text. Built
+# Column-op-by-Column-op these cost one py4j round trip per operator
+# call — measured 86 (norm) / 101 (dot) / 3893 (lsh_bucket) round trips
+# at ~0.3-0.5 ms each; one ``F.expr`` costs 3. Double literals
+# round-trip bit-exactly via repr + the ``D`` suffix (:func:`_dlit`).
 
 
 def _dlit(x: float) -> str:
@@ -71,6 +66,13 @@ def _dlit(x: float) -> str:
 
 
 def dot_sexpr(a: str, b: str) -> str:
+    """Sequential-fold dot product (order-deterministic).
+
+    Deliberately the lambda-based ``aggregate``/``zip_with`` pair:
+    an unrolled ``a[0]*b[0] + ...`` chain was measured 3-5x SLOWER
+    here — the 129-node expression tree exceeds codegen method
+    limits and falls back to per-node interpretation, while the
+    fold is a single tight evaluator loop over the array."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, "
         f"(acc, x) -> acc + x)"
@@ -93,6 +95,9 @@ def plane_sexpr(plane: list[float]) -> str:
 
 
 def lsh_bucket_sexpr(vec: str, planes: list[list[float]] | None = None) -> str:
+    """8-bit sign-LSH bucket: bit j = (vec . plane_j) > 0. ``planes``
+    defaults to table 0 (HYPERPLANES); pass another entry of
+    HYPERPLANE_TABLES for multi-table probing."""
     terms = [
         f"(CASE WHEN {dot_sexpr(vec, plane_sexpr(plane))} > 0.0D "
         f"THEN {2 ** j}L ELSE 0L END)"
@@ -101,53 +106,20 @@ def lsh_bucket_sexpr(vec: str, planes: list[list[float]] | None = None) -> str:
     return "CAST(0 AS BIGINT) + " + " + ".join(terms)
 
 
-def dot(a: Column | str, b: Column | str) -> Column:
-    """Sequential-fold dot product (order-deterministic).
-
-    Deliberately the lambda-based ``aggregate``/``zip_with`` pair:
-    an unrolled ``a[0]*b[0] + ...`` chain was measured 3-5x SLOWER
-    here — the 129-node expression tree exceeds codegen method
-    limits and falls back to per-node interpretation, while the
-    fold is a single tight evaluator loop over the array.
-
-    String args are SQL text (usually a column name) and take the
-    one-``F.expr`` fast path — 3 py4j round trips instead of 101."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(dot_sexpr(a, b))
-    return fold_sum(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0))
+def dot(a: str, b: str) -> Column:
+    return F.expr(dot_sexpr(a, b))
 
 
-def norm(a: Column | str) -> Column:
-    if isinstance(a, str):
-        return F.expr(norm_sexpr(a))
-    return F.sqrt(fold_sum(F.transform(a, lambda x: x * x), F.lit(0.0)))
+def norm(a: str) -> Column:
+    return F.expr(norm_sexpr(a))
 
 
-def cosine(a: Column | str, b: Column | str) -> Column:
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(cosine_sexpr(a, b))
-    return dot(a, b) / (norm(a) * norm(b))
+def cosine(a: str, b: str) -> Column:
+    return F.expr(cosine_sexpr(a, b))
 
 
-def plane_lit(plane: list[float]) -> Column:
-    return F.expr(plane_sexpr(plane))
-
-
-def lsh_bucket(
-    vec: Column | str, planes: list[list[float]] | None = None
-) -> Column:
-    """8-bit sign-LSH bucket: bit j = (vec . plane_j) > 0. ``planes``
-    defaults to table 0 (HYPERPLANES); pass another entry of
-    HYPERPLANE_TABLES for multi-table probing. String ``vec`` takes
-    the one-``F.expr`` fast path (3 py4j round trips vs 3893)."""
-    if isinstance(vec, str):
-        return F.expr(lsh_bucket_sexpr(vec, planes))
-    bucket = F.lit(0).cast("long")
-    for j, plane in enumerate(planes if planes is not None else HYPERPLANES):
-        bucket = bucket + F.when(
-            dot(vec, plane_lit(plane)) > 0.0, F.lit(2**j).cast("long")
-        ).otherwise(F.lit(0))
-    return bucket
+def lsh_bucket(vec: str, planes: list[list[float]] | None = None) -> Column:
+    return F.expr(lsh_bucket_sexpr(vec, planes))
 
 
 def multitable_lsh_topk(
@@ -1838,22 +1810,19 @@ def warm_refresh_model(
 JL_PLANES = HYPERPLANE_TABLES[0] + HYPERPLANE_TABLES[1]
 
 
-def project_jl(vec: Column | str, planes: list[list[float]] | None = None) -> Column:
+def project_jl_sexpr(vec: str, planes: list[list[float]] | None = None) -> str:
     """Dense random projection: 64-dim -> len(planes)-dim double
     array, component j = vec . plane_j (sequential fold, oracle-
-    exact). String ``vec`` takes the one-``F.expr`` fast path
-    (16 plane dots x ~360 py4j round trips otherwise)."""
-    if isinstance(vec, str):
-        return F.expr(
-            "array("
-            + ", ".join(
-                dot_sexpr(vec, plane_sexpr(p)) for p in (planes or JL_PLANES)
-            )
-            + ")"
-        )
-    return F.array(
-        *[dot(vec, plane_lit(p)) for p in (planes or JL_PLANES)]
+    exact)."""
+    return (
+        "array("
+        + ", ".join(dot_sexpr(vec, plane_sexpr(p)) for p in (planes or JL_PLANES))
+        + ")"
     )
+
+
+def project_jl(vec: str, planes: list[list[float]] | None = None) -> Column:
+    return F.expr(project_jl_sexpr(vec, planes))
 
 
 def projected_rerank_topk(

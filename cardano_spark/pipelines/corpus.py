@@ -450,12 +450,12 @@ def build_corpus(
     # stays a shuffle-free filter on the same scan)
     if quality_rules not in (None, "gopher"):
         raise ValueError(f"unknown quality_rules: {quality_rules!r}")
-    toks = F.size(TX.tokens(F.coalesce(F.col("text"), F.lit(""))))
+    toks = F.size(TX.tokens("coalesce(text, '')"))
     # zero-token documents (possible after span-level excision) never
     # pass: the quality formula divides by the token count, so it is
     # evaluated behind the non-empty guard (CASE short-circuits under
     # ANSI mode; a bare `&` would still evaluate both sides and raise)
-    qcond = TX.quality_score(F.col("text")) >= F.lit(float(min_quality))
+    qcond = TX.quality_score("text") >= F.lit(float(min_quality))
     gate = (
         (toks >= F.lit(int(min_tokens)))
         & F.when(toks >= 1, qcond).otherwise(F.lit(False))
@@ -490,7 +490,7 @@ def build_corpus(
 
     # 6. optional PPS token budget (deterministic systematic draw)
     if token_budget_points is not None:
-        toks_b = F.size(TX.tokens(F.coalesce(F.col("text"), F.lit(""))))
+        toks_b = F.size(TX.tokens("coalesce(text, '')"))
         picked = CU.pps_systematic_sample(
             kept, "doc_id", toks_b, k=int(token_budget_points)
         ).select("doc_id")
@@ -519,9 +519,9 @@ def build_corpus(
                 id_col="doc_id",
             ).select(F.col("node").alias("doc_id"), "cluster_id")
             kept = kept.join(comp, "doc_id")
-            bucket = hash_bucket(F.col("cluster_id"), 100)
+            bucket = hash_bucket("cluster_id", 100)
         else:
-            bucket = hash_bucket(F.col("doc_id"), 100)
+            bucket = hash_bucket("doc_id", 100)
         kept = kept.withColumn(
             "split",
             F.when(bucket < 80, F.lit("train"))
@@ -547,7 +547,7 @@ def build_corpus(
         if pack_budget is None:
             return frame
         toks_n = F.size(
-            TX.tokens(F.coalesce(F.col("text"), F.lit("")))
+            TX.tokens("coalesce(text, '')")
         ).cast("long")
         packed = CU.pack_sequences(
             frame.select(F.col(order_col), toks_n.alias("_nt")),
@@ -583,7 +583,7 @@ def build_corpus(
             )
         sharded = _pack(frame, "doc_id").withColumn(
             "_shard_key",
-            md5_long(F.concat(F.lit("corpus|"), F.col("doc_id").cast("string"))),
+            md5_long("concat('corpus|', CAST(doc_id AS STRING))"),
         )
         return write_training_shards(
             sharded, path, "_shard_key", n_shards, fmt=export_format
@@ -617,11 +617,11 @@ def build_corpus(
     # shards so the export is self-describing.
     attributes_path = None
     if emit_attributes:
-        toks_a = F.size(TX.tokens(F.coalesce(F.col("text"), F.lit(""))))
+        toks_a = F.size(TX.tokens("coalesce(text, '')"))
         qfp = F.when(
             F.col("text").isNotNull() & (F.length("text") > 0),
             F.floor(
-                TX.quality_score(F.col("text")) * F.lit(1048576.0)
+                TX.quality_score("text") * F.lit(1048576.0)
             ).cast("long"),
         )
         _, gflags = CU.gopher_flag_columns(F.col("text"))
@@ -887,7 +887,7 @@ def build_corpus_incremental(
     batch = batch.localCheckpoint(eager=False)
     n_arrived = batch.count()
 
-    shingles = TX.distinct_tokens(F.coalesce(F.col("text"), F.lit("")))
+    shingles = TX.distinct_tokens("coalesce(text, '')")
     seen_schema = batch.withColumn("_digest", F.md5("text")).schema
     band_schema = DD.band_index(
         spark.createDataFrame([], batch.schema), "doc_id", shingles
@@ -987,9 +987,7 @@ def build_corpus_incremental(
     def _with_shard_key(frame):
         return frame.withColumn(
             "_shard_key",
-            md5_long(
-                F.concat(F.lit("corpus|"), F.col("doc_id").cast("string"))
-            ),
+            md5_long("concat('corpus|', CAST(doc_id AS STRING))"),
         )
 
     def _retraction_ids():
@@ -1016,9 +1014,9 @@ def build_corpus_incremental(
         """The shared post-decontam gate — the SAME expression for
         arriving batches and for cut-mode re-evaluation (convergence
         demands a single definition)."""
-        toks = F.size(TX.tokens(F.coalesce(F.col("text"), F.lit(""))))
+        toks = F.size(TX.tokens("coalesce(text, '')"))
         qcond = (
-            TX.quality_score(F.col("text")) >= F.lit(float(min_quality))
+            TX.quality_score("text") >= F.lit(float(min_quality))
         )
         gate = (
             (toks >= F.lit(int(min_tokens)))

@@ -782,7 +782,7 @@ def q54_kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = table(spark, sf_dir, "events")
     hashes = (
-        e.select(md5_long(F.col("user_id").cast("string")).alias("h"))
+        e.select(md5_long("CAST(user_id AS STRING)").alias("h"))
         .where(F.col("h").isNotNull())
         .distinct()
     )
@@ -920,7 +920,7 @@ def q74_hll_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cardano_spark.functions.hashing import md5_long, shl1
 
     e = table(spark, sf_dir, "events")
-    h = md5_long(F.col("user_id").cast("string"))
+    h = md5_long("CAST(user_id AS STRING)")
     reg = F.shiftrightunsigned(h, _HLL_REM_BITS)
     rem = h.bitwiseAND(F.lit(_HLL_REM_MASK))
     # 2^(52 - rho) == 2^bit_length(rem) for rem>0, else 2^0

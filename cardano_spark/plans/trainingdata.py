@@ -29,12 +29,10 @@ from cardano_spark.functions.hashing import (
     LSH_BANDS,
     LSH_ROWS,
     MINHASH_PERMS,
-    POLY_MOD,
     SIMHASH_BITS,
     hash_bucket,
     hash_bucket_sql,
     md5_long,
-    md5_long_sexpr,
     md5_long_sql,
     minhash_sig_sql,
     rolling_fingerprint,
@@ -256,16 +254,14 @@ def q23_simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the per-token md5 + simhash folds are the whole query; spread
     # the unsplittable fixture scan across cores (guide §2.5)
     d = narrow_table(spark, sf_dir, "documents", by=["doc_id"])
-    # simhash over the hash array as ONE SQL-text expr (guide §5
-    # driver latency — the Column build costs ~840 py4j round trips)
-    hashes = f"transform({TX.distinct_tokens_sexpr('text')}, x -> {md5_long_sexpr('x')})"
+    hashes = DD.md5_long_arr_sexpr(TX.distinct_tokens_sexpr("text"))
     return d.select("doc_id", DD.simhash(hashes).alias("simhash"))
 
 
 def q24_simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs: byte-band blocking + hamming <= 8."""
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 4 == 0)
-    hashes = f"transform({TX.distinct_tokens_sexpr('text')}, x -> {md5_long_sexpr('x')})"
+    hashes = DD.md5_long_arr_sexpr(TX.distinct_tokens_sexpr("text"))
     withfp = d.select("doc_id", DD.simhash(hashes).alias("fp"))
     return DD.simhash_pairs(withfp, "doc_id", F.col("fp"), max_hamming=8)
 
@@ -456,7 +452,7 @@ def q60_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-partition offsets — no single-partition global window)."""
     d = table(spark, sf_dir, "documents")
     return CU.pack_sequences(
-        d, "doc_id", F.size(TX.tokens(F.col("text"))), budget=512
+        d, "doc_id", F.size(TX.tokens("text")), budget=512
     ).orderBy("doc_id")
 
 
@@ -500,17 +496,16 @@ def q30_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document quality score: fixed-order double formula over
     stopword ratio, length score, punctuation ratio."""
     d = table(spark, sf_dir, "documents")
-    toks = TX.tokens(F.col("text"))
-    n_tok = F.size(toks).cast("long")
-    s_en = TX.stopword_hits(toks, "en").cast("long")
-    punct = TX.punct_count(F.col("text")).cast("long")
+    n_tok = F.size(TX.tokens("text")).cast("long")
+    s_en = TX.stopword_hits(TX.tokens_sexpr("text"), "en").cast("long")
+    punct = TX.punct_count("text").cast("long")
     stop_ratio = s_en.cast("double") / n_tok.cast("double")
     return d.select(
         "doc_id",
         n_tok.alias("n_tokens"),
         punct.alias("n_punct"),
         stop_ratio.alias("stop_ratio"),
-        TX.quality_score(F.col("text")).alias("quality"),
+        TX.quality_score("text").alias("quality"),
     )
 
 
@@ -518,7 +513,7 @@ def q31_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting: whitespace and BPE-ish regex tokenizations
     plus mean token length (chars)."""
     d = table(spark, sf_dir, "documents")
-    n_ws = F.size(TX.tokens(F.col("text"))).cast("long")
+    n_ws = F.size(TX.tokens("text")).cast("long")
     n_bpe = TX.token_count_regex(F.col("text")).cast("long")
     n_chars = F.length(F.col("text")).cast("long")
     avg_tok = (n_chars - (n_ws - F.lit(1))).cast("double") / n_ws.cast("double")
@@ -535,7 +530,7 @@ def q32_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-token md5 + rolling-hash fold; spread the unsplittable
     # fixture scan across cores (guide §2.5)
     d = narrow_table(spark, sf_dir, "documents", by=["doc_id"])
-    hashes = DD.md5_long_arr(TX.tokens(F.col("text")))
+    hashes = DD.md5_long_arr(TX.tokens_sexpr("text"))
     return d.select("doc_id", rolling_fingerprint(hashes).alias("fingerprint"))
 
 
@@ -795,7 +790,7 @@ def q42_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation, then TakeOrderedAndProject; no driver-side
     collection, so the same plan holds at 100 TB."""
     d = table(spark, sf_dir, "documents")
-    toks = d.select(F.explode(TX.tokens(F.col("text"))).alias("token"))
+    toks = d.select(F.explode(TX.tokens("text")).alias("token"))
     counts = toks.groupBy("token").agg(F.count("*").alias("n"))
     return counts.orderBy(F.desc("n"), F.asc("token")).limit(50)
 
@@ -815,7 +810,7 @@ def q55_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     same plan at 100 TB."""
     d = table(spark, sf_dir, "documents")
     tf = (
-        d.select("doc_id", F.explode(TX.tokens(F.col("text"))).alias("token"))
+        d.select("doc_id", F.explode(TX.tokens("text")).alias("token"))
         .groupBy("doc_id", "token")
         .agg(F.count("*").alias("tf"))
     )
@@ -849,7 +844,7 @@ def q41_stratified_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     so it is stable under retries, re-runs, and repartitioning, and
     any shard of a 100 TB corpus can be split independently."""
     d = table(spark, sf_dir, "documents")
-    b = hash_bucket(F.col("doc_id"), 100)
+    b = hash_bucket("doc_id", 100)
     split = (
         F.when(b < 80, F.lit("train")).when(b < 90, F.lit("val")).otherwise(F.lit("test"))
     )
@@ -899,7 +894,7 @@ def q64_source_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     per_src = d.groupBy("source").agg(
         F.count("*").alias("n_docs"),
-        F.sum(F.size(TX.tokens(F.col("text")))).alias("n_tokens"),
+        F.sum(F.size(TX.tokens("text"))).alias("n_tokens"),
     )
     w = W.partitionBy()
     total_docs = F.sum("n_docs").over(w)
@@ -944,9 +939,7 @@ def q75_mixture_sampler(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source", F.least(F.lit(1.0), target / share).alias("keep_rate")
     )
     frac = (
-        md5_long(F.concat(F.lit("mix|"), F.col("doc_id").cast("string"))).cast(
-            "double"
-        )
+        md5_long("concat('mix|', CAST(doc_id AS STRING))").cast("double")
         / F.lit(_MD5_SPACE)
     )
     sampled = (
@@ -978,7 +971,7 @@ CMS_DEPTH = 4
 CMS_WIDTH = 1024
 
 
-def _cms_cells(token: F.Column) -> F.Column:
+def _cms_cells(token: str) -> F.Column:
     """The sketch cells a token increments: (row j, md5-derived
     column) per depth row — engine-portable hashing, so the oracle
     rebuilds the identical sketch."""
@@ -987,7 +980,7 @@ def _cms_cells(token: F.Column) -> F.Column:
             F.struct(
                 F.lit(j).alias("j"),
                 F.pmod(
-                    md5_long(F.concat(F.lit(f"cm{j}|"), token)), F.lit(CMS_WIDTH)
+                    md5_long(f"concat('cm{j}|', {token})"), F.lit(CMS_WIDTH)
                 ).alias("c"),
             )
             for j in range(CMS_DEPTH)
@@ -1014,9 +1007,9 @@ def q86_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream, and sketches MERGE by cell-wise addition (that's the
     point)."""
     d = table(spark, sf_dir, "documents")
-    toks = d.select(F.explode(TX.tokens(F.col("text"))).alias("token"))
+    toks = d.select(F.explode(TX.tokens("text")).alias("token"))
     cells = (
-        toks.select(F.explode(_cms_cells(F.col("token"))).alias("x"))
+        toks.select(F.explode(_cms_cells("token")).alias("x"))
         .select("x.j", "x.c")
         .groupBy("j", "c")
         .agg(F.count("*").alias("cell_n"))
@@ -1028,7 +1021,7 @@ def q86_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(10)
     )
     probes = top.select(
-        "token", "true_n", F.explode(_cms_cells(F.col("token"))).alias("x")
+        "token", "true_n", F.explode(_cms_cells("token")).alias("x")
     ).select("token", "true_n", "x.j", "x.c")
     return (
         probes.join(F.broadcast(cells), ["j", "c"])
@@ -1074,7 +1067,7 @@ def q79_per_stratum_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     q43 two-phase trick (per-input-partition pre-top-k) — the hash
     order makes the pre-filter exact there too."""
     d = table(spark, sf_dir, "documents")
-    h = md5_long(F.concat(F.lit("sample|"), F.col("doc_id").cast("string")))
+    h = md5_long("concat('sample|', CAST(doc_id AS STRING))")
     w = W.partitionBy("lang", "source").orderBy(F.asc("_h"), F.asc("doc_id"))
     return (
         d.select("doc_id", "lang", "source", h.alias("_h"))
@@ -1120,7 +1113,7 @@ def q103_token_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # would yield -1 here while the oracle's len(string_split(NULL))
     # is NULL (skipped by SUM) — same divergence class fixed in q59
     per_src = d.groupBy("source").agg(
-        F.sum(F.size(TX.tokens(F.coalesce(F.col("text"), F.lit("")))))
+        F.sum(F.size(TX.tokens("coalesce(text, '')")))
         .cast("long")
         .alias("n_tokens")
     )
@@ -1161,7 +1154,7 @@ def q104_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.coalesce(F.col("_drop"), F.lit(0)).alias("_drop"),
         # NULL-text guard: see q103 (sizeOfNull vs oracle NULL-skip)
-        F.size(TX.tokens(F.coalesce(F.col("text"), F.lit("")))).alias("_tok"),
+        F.size(TX.tokens("coalesce(text, '')")).alias("_tok"),
     )
     return audited.groupBy("source").agg(
         F.count(F.when(F.col("_drop") == 0, 1)).alias("n_kept"),
@@ -1184,7 +1177,7 @@ def q66_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     existing = d.filter(F.col("doc_id") < 300)
     new = d.filter(F.col("doc_id") >= 300)
     return DD.incremental_minhash_pairs(
-        existing, new, "doc_id", TX.distinct_tokens(F.col("text")), threshold=0.8
+        existing, new, "doc_id", TX.distinct_tokens("text"), threshold=0.8
     )
 
 
@@ -1230,7 +1223,7 @@ def q107_document_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same separator both engines split on."""
     size, step = 64, 48
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 16 == 0)
-    toks = TX.tokens(F.coalesce(F.col("text"), F.lit("")))
+    toks = TX.tokens("coalesce(text, '')")
     n = F.size(toks)
     starts = F.sequence(F.lit(0), F.greatest(n - 1, F.lit(0)), F.lit(step))
     e = d.select(
@@ -1324,13 +1317,13 @@ def q135_clean_eval_carveout(
     Returns (lang, doc_id, pick_order)."""
     d = table(spark, sf_dir, "documents")
 
-    def bucket_of(c: Column) -> Column:
+    def bucket_of(c: str) -> Column:
         return hash_bucket(c, 100)
 
-    is_test_a = bucket_of(F.col("id_a")) >= 90
-    is_test_b = bucket_of(F.col("id_b")) >= 90
-    is_train_a = bucket_of(F.col("id_a")) < 80
-    is_train_b = bucket_of(F.col("id_b")) < 80
+    is_test_a = bucket_of("id_a") >= 90
+    is_test_b = bucket_of("id_b") >= 90
+    is_train_a = bucket_of("id_a") < 80
+    is_train_b = bucket_of("id_b") < 80
     pairs = DD.minhash_lsh_pairs(
         d,
         "doc_id",
@@ -1347,11 +1340,11 @@ def q135_clean_eval_carveout(
         )
         .distinct()
     )
-    test_docs = d.filter(bucket_of(F.col("doc_id")) >= 90).select(
+    test_docs = d.filter(bucket_of("doc_id") >= 90).select(
         "doc_id", "lang"
     )
     clean = test_docs.join(contaminated, "doc_id", "left_anti")
-    h = md5_long(F.concat(F.lit("sample|"), F.col("doc_id").cast("string")))
+    h = md5_long("concat('sample|', CAST(doc_id AS STRING))")
     w = W.partitionBy("lang").orderBy(F.asc("_h"), F.asc("doc_id"))
     return (
         clean.select("doc_id", "lang", h.alias("_h"))
@@ -1411,7 +1404,7 @@ def q117_arrival_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     existing = d.filter(F.col("doc_id") < 300)
     new = d.filter(F.col("doc_id") >= 300)
     pairs = DD.incremental_minhash_pairs(
-        existing, new, "doc_id", TX.distinct_tokens(F.col("text")), threshold=0.8
+        existing, new, "doc_id", TX.distinct_tokens("text"), threshold=0.8
     )
     dups = pairs.select(F.col("id_b").alias("doc_id")).distinct().withColumn(
         "_dup", F.lit(1)
@@ -1424,12 +1417,12 @@ def q117_arrival_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         TX.ngram_shingles(F.col("text"), 3),
         TX.ngram_shingles(F.col("text"), 3),
     ).select("doc_id", "contamination")
-    n_tok = F.size(TX.tokens(F.col("text")))
+    n_tok = F.size(TX.tokens("text"))
     flags = (
         new.select(
             "doc_id",
             F.when(
-                (TX.quality_score(F.col("text")) >= 0.3) & (n_tok >= 5), 1
+                (TX.quality_score("text") >= 0.3) & (n_tok >= 5), 1
             )
             .otherwise(0)
             .cast("long")
@@ -1522,7 +1515,7 @@ def q120_pps_token_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return CU.pps_systematic_sample(
         d,
         "doc_id",
-        F.size(TX.tokens(F.coalesce(F.col("text"), F.lit("")))),
+        F.size(TX.tokens("coalesce(text, '')")),
         k=20,
     )
 
@@ -1554,7 +1547,7 @@ def q121_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     implies)."""
     d = table(spark, sf_dir, "documents")
     per_src = d.groupBy("source").agg(
-        F.sum(F.size(TX.tokens(F.coalesce(F.col("text"), F.lit("")))))
+        F.sum(F.size(TX.tokens("coalesce(text, '')")))
         .cast("long")
         .alias("n_tokens")
     )
@@ -1755,7 +1748,7 @@ def q128_chunk_lang_consistency(
     n_langs)."""
     d = table(spark, sf_dir, "documents")
     size, step = 64, 48
-    toks = TX.tokens(F.coalesce(F.col("text"), F.lit("")))
+    toks = TX.tokens("coalesce(text, '')")
     n = F.size(toks)
     starts = F.sequence(F.lit(0), F.greatest(n - 1, F.lit(0)), F.lit(step))
     chunks = d.select(
@@ -1943,7 +1936,7 @@ def q132_split_leakage_audit(
     ZERO extra joins or exchanges on top of the pair detection."""
     d = table(spark, sf_dir, "documents")
 
-    def split_of(c: Column) -> Column:
+    def split_of(c: str) -> Column:
         b = hash_bucket(c, 100)
         return (
             F.when(b < 80, F.lit("train"))
@@ -1962,13 +1955,13 @@ def q132_split_leakage_audit(
         "doc_id",
         TX.distinct_tokens_sexpr("text"),
         threshold=0.8,
-        candidate_filter=split_of(F.col("id_a")) != split_of(F.col("id_b")),
+        candidate_filter=split_of("id_a") != split_of("id_b"),
     )
     return pairs.select(
         "id_a",
         "id_b",
-        split_of(F.col("id_a")).alias("split_a"),
-        split_of(F.col("id_b")).alias("split_b"),
+        split_of("id_a").alias("split_a"),
+        split_of("id_b").alias("split_b"),
         "jaccard",
     ).filter(F.col("split_a") != F.col("split_b"))
 
@@ -1988,7 +1981,7 @@ def q133_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     collision-free 128-bit key discipline as q110. Output is
     |sources| rows."""
     d = table(spark, sf_dir, "documents")
-    toks = TX.tokens(F.coalesce(F.col("text"), F.lit("")))
+    toks = TX.tokens("coalesce(text, '')")
     k = F.size(toks) - F.lit(2)
     grams = F.when(
         k >= 1,
@@ -2053,7 +2046,7 @@ def q115_minhash_estimate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold."""
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 8 == 0)
     return DD.minhash_estimate_report(
-        d, "doc_id", TX.distinct_tokens(F.col("text"))
+        d, "doc_id", TX.distinct_tokens("text")
     )
 
 
@@ -2126,7 +2119,7 @@ def q111_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial counts, then TakeOrderedAndProject. No driver-side state;
     iterating merges re-runs this plan on the re-tokenized corpus."""
     d = table(spark, sf_dir, "documents")
-    toks = TX.tokens(F.coalesce(F.col("text"), F.lit("")))
+    toks = TX.tokens("coalesce(text, '')")
     staged = d.select(
         toks.alias("_t"), (F.size(toks) - 1).alias("_np")
     ).filter(F.col("_np") >= 1)
@@ -2174,7 +2167,7 @@ def q137_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     edges = pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
     comp = DD.connected_components(d.select("doc_id"), edges, id_col="doc_id")
-    b = hash_bucket(F.col("cluster_id"), 100)
+    b = hash_bucket("cluster_id", 100)
     split = (
         F.when(b < 80, F.lit("train"))
         .when(b < 90, F.lit("val"))
@@ -2217,7 +2210,7 @@ def q138_quality_quantile_buckets(
     identically, which is why that precedent held)."""
     d = table(spark, sf_dir, "documents")
     qual = d.select(
-        "doc_id", "lang", TX.quality_score(F.col("text")).alias("quality")
+        "doc_id", "lang", TX.quality_score("text").alias("quality")
     ).localCheckpoint(eager=False)
     th = qual.groupBy("lang").agg(
         F.expr(
@@ -2363,7 +2356,7 @@ def q142_doc_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups with map-side partials; NULL text counts as zero tokens
     (the q59/q103 coalesce discipline)."""
     d = table(spark, sf_dir, "documents")
-    n_tok = F.size(TX.tokens(F.coalesce(F.col("text"), F.lit("")))).cast(
+    n_tok = F.size(TX.tokens("coalesce(text, '')")).cast(
         "long"
     )
     bucket = F.length(F.bin(n_tok)).cast("long")
@@ -2477,7 +2470,7 @@ def q150_split_leakage_summary(
     partials — nothing corpus-sized shuffles twice."""
     d = table(spark, sf_dir, "documents")
 
-    def split_of(c: Column) -> Column:
+    def split_of(c: str) -> Column:
         b = hash_bucket(c, 100)
         return (
             F.when(b < 80, F.lit("train"))
@@ -2490,17 +2483,17 @@ def q150_split_leakage_summary(
         "doc_id",
         TX.distinct_tokens_sexpr("text"),
         threshold=0.8,
-        candidate_filter=split_of(F.col("id_a")) != split_of(F.col("id_b")),
+        candidate_filter=split_of("id_a") != split_of("id_b"),
     )
     lab = pairs.select(
         "id_a",
         "id_b",
         "jaccard",
         F.least(
-            split_of(F.col("id_a")), split_of(F.col("id_b"))
+            split_of("id_a"), split_of("id_b")
         ).alias("split_x"),
         F.greatest(
-            split_of(F.col("id_a")), split_of(F.col("id_b"))
+            split_of("id_a"), split_of("id_b")
         ).alias("split_y"),
         F.floor(F.col("jaccard") * F.lit(1048576.0))
         .cast("long")
@@ -2611,7 +2604,7 @@ def _bm25_probe_terms(d: DataFrame) -> DataFrame:
     keywords (the head is stop-word-like and matches everything, the
     tail matches nothing). Vocabulary-sized TakeOrdered, tiny."""
     occ = d.select(
-        F.explode(TX.tokens(F.coalesce(F.col("text"), F.lit("")))).alias(
+        F.explode(TX.tokens("coalesce(text, '')")).alias(
             "term"
         )
     )
@@ -2643,7 +2636,7 @@ def q155_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scores = CU.bm25_scores(
         d,
         "doc_id",
-        TX.tokens(F.coalesce(F.col("text"), F.lit(""))),
+        TX.tokens("coalesce(text, '')"),
         _bm25_probe_terms(d),
     )
     # TakeOrdered cut FIRST (distributed), then the rank window runs
@@ -2674,7 +2667,7 @@ def q156_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     scores = CU.bm25_scores(
         d,
         "doc_id",
-        TX.tokens(F.coalesce(F.col("text"), F.lit(""))),
+        TX.tokens("coalesce(text, '')"),
         _bm25_probe_terms(d),
     )
     # same TakeOrdered-then-rank shape as q155 (no corpus-sized
@@ -2706,10 +2699,10 @@ def q158_corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-identical)."""
     d = table(spark, sf_dir, "documents")
     txt = F.coalesce(F.col("text"), F.lit(""))
-    n_tok = F.size(TX.tokens(txt)).cast("long")
+    n_tok = F.size(TX.tokens("coalesce(text, '')")).cast("long")
     qfp = F.when(
         F.col("text").isNotNull() & (F.length("text") > 0),
-        F.floor(TX.quality_score(F.col("text")) * F.lit(1048576.0)).cast(
+        F.floor(TX.quality_score("text") * F.lit(1048576.0)).cast(
             "long"
         ),
     )
@@ -2875,7 +2868,7 @@ def q161_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank machinery (range shuffle + broadcast offsets)."""
     d = table(spark, sf_dir, "documents")
     qual = d.select(
-        "doc_id", "lang", TX.quality_score(F.col("text")).alias("quality")
+        "doc_id", "lang", TX.quality_score("text").alias("quality")
     ).localCheckpoint(eager=False)
     th = qual.groupBy("lang").agg(
         F.expr(
@@ -2927,7 +2920,7 @@ def q162_length_batch_report(
     distributed prefix sum — no global window; output rows =
     ceil(total_tokens/512), never corpus-sized."""
     d = table(spark, sf_dir, "documents")
-    n_tok = F.size(TX.tokens(F.coalesce(F.col("text"), F.lit(""))))
+    n_tok = F.size(TX.tokens("coalesce(text, '')"))
     return CU.length_batch_report(d, "doc_id", n_tok, budget=512)
 
 
@@ -3040,7 +3033,7 @@ def q167_bm25_prf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     stay broadcast-sized throughout; top-k cuts are
     TakeOrdered-first (the q155 discipline)."""
     d = table(spark, sf_dir, "documents")
-    toks = TX.tokens(F.coalesce(F.col("text"), F.lit("")))
+    toks = TX.tokens("coalesce(text, '')")
     return CU.bm25_prf_topk(
         d, "doc_id", toks, _bm25_probe_terms(d),
         fb_k=10, n_expansion=5, k=10,
@@ -3065,7 +3058,7 @@ def q168_dedup_aware_pps(spark: SparkSession, sf_dir: str) -> DataFrame:
     wts = q139_soft_dedup_weights(spark, sf_dir).select(
         "doc_id", "n_members"
     )
-    n_tok = F.size(TX.tokens(F.coalesce(F.col("text"), F.lit(""))))
+    n_tok = F.size(TX.tokens("coalesce(text, '')"))
     weighted = d.select("doc_id", n_tok.cast("long").alias("_nt")).join(
         wts, "doc_id"
     )
@@ -3200,7 +3193,7 @@ def q170_datasheet_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = d.select(
         "source",
         (F.col("doc_id") % 10 == 7).cast("int").alias("_new"),
-        F.size(TX.tokens(txt)).cast("long").alias("_nt"),
+        F.size(TX.tokens("coalesce(text, '')")).cast("long").alias("_nt"),
         F.md5(txt).alias("_dg"),
     )
     prev_dg = F.when(F.col("_new") == 0, F.col("_dg"))
@@ -3354,7 +3347,7 @@ def q176_lsh_band_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = d.select(
         F.col("doc_id").alias("_id"),
         "lang",
-        TX.distinct_tokens(F.col("text")).alias("_sh"),
+        TX.distinct_tokens("text").alias("_sh"),
     ).localCheckpoint(eager=False)
     sig = DD._sig_frame(base.select("_id", "_sh")).localCheckpoint(
         eager=False

@@ -28,8 +28,11 @@ import json
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from cardano_spark.functions.hashing import md5_long, md5_long_sexpr
+from cardano_spark.functions.scalars import sql_ident
 
 
 @dataclass
@@ -147,6 +150,19 @@ class IncrementalExportResult:
     rewritten: list[int]  # shard ids actually written this run
 
 
+def _shard_of(key_col: str, n_shards: int) -> Column:
+    """Shard membership: ``md5_long(key) pmod n_shards``."""
+    key = md5_long_sexpr(f"CAST({sql_ident(key_col)} AS STRING)")
+    return F.expr(f"CAST(pmod({key}, {n_shards}) AS INT)")
+
+
+def _row_hash(cols: list[str]) -> Column:
+    """Row content hash: ``md5_long(to_json(struct(*cols)))``."""
+    return md5_long(
+        "to_json(struct(" + ", ".join(sql_ident(c) for c in cols) + "))"
+    )
+
+
 def write_training_shards_incremental(
     df: DataFrame,
     path: str,
@@ -211,16 +227,10 @@ def write_training_shards_incremental(
 
     Returns the updated manifest (shards carry their digests) plus
     the rewrite accounting."""
-    from cardano_spark.functions.hashing import md5_long
-
     spark = df.sparkSession
     cols = df.columns
-    staged = df.withColumn(
-        "_shard",
-        F.pmod(md5_long(F.col(key_col).cast("string")), F.lit(n_shards))
-        .cast("int"),
-    ).withColumn(
-        "_rh", md5_long(F.to_json(F.struct(*[F.col(c) for c in cols])))
+    staged = df.withColumn("_shard", _shard_of(key_col, n_shards)).withColumn(
+        "_rh", _row_hash(cols)
     )
     # four independent signals per shard (xor, 2^20-modular sum,
     # full-width 2^63-modular sum, count): a content change slipping
@@ -371,8 +381,6 @@ def write_training_shards_delta(
     is full by definition. Reference analogue: the watermark-bounded
     per-batch upload in s3_to_db_cardano_blocks_pipeline.py:64-127 —
     work proportional to the batch, never the table."""
-    from cardano_spark.functions.hashing import md5_long
-
     spark = upserts.sparkSession
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(path)
@@ -396,12 +404,8 @@ def write_training_shards_delta(
     cols = upserts.columns  # canonical data-column order for _rh
 
     def staged(df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            "_shard",
-            F.pmod(md5_long(F.col(key_col).cast("string")), F.lit(n_shards))
-            .cast("int"),
-        ).withColumn(
-            "_rh", md5_long(F.to_json(F.struct(*[F.col(c) for c in cols])))
+        return df.withColumn("_shard", _shard_of(key_col, n_shards)).withColumn(
+            "_rh", _row_hash(cols)
         )
 
     def digest_rows(df: DataFrame) -> dict[int, dict]:
@@ -429,11 +433,7 @@ def write_training_shards_delta(
     ups = staged(upserts).localCheckpoint(eager=True)
     dels = (
         delete_keys.select(F.col(key_col))
-        .withColumn(
-            "_shard",
-            F.pmod(md5_long(F.col(key_col).cast("string")), F.lit(n_shards))
-            .cast("int"),
-        )
+        .withColumn("_shard", _shard_of(key_col, n_shards))
         if delete_keys is not None
         else None
     )
@@ -462,10 +462,7 @@ def write_training_shards_delta(
             spark.read.parquet(path)
             .filter(F.col("_shard").isin(existing_touched))
             .select(*cols, "_shard")
-            .withColumn(
-                "_rh",
-                md5_long(F.to_json(F.struct(*[F.col(c) for c in cols]))),
-            )
+            .withColumn("_rh", _row_hash(cols))
         )
         gone_keys = ups.select(F.col(key_col))
         if dels is not None:

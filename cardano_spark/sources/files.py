@@ -39,22 +39,6 @@ def read_json_zone(
     return df.select("*", F.col("_metadata.file_modification_time").alias("_modified"))
 
 
-def read_csv_zone(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    modified_after: datetime | None = None,
-) -> DataFrame:
-    """Transformed-zone CSV scan (S11). Header + declared schema; the
-    reference's BOM/ctrl-char header sanitization (C6) is unnecessary
-    because we write the zone ourselves with clean headers."""
-    reader = spark.read.schema(schema).option("header", "true")
-    if modified_after is not None:
-        reader = reader.option("modifiedAfter", _fmt(modified_after))
-    df = reader.csv(path)
-    return df.select("*", F.col("_metadata.file_modification_time").alias("_modified"))
-
-
 def cast_to_schema(
     df: DataFrame,
     target: T.StructType,

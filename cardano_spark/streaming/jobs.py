@@ -439,62 +439,6 @@ def distinct_type_counter(events: DataFrame) -> DataFrame:
     )
 
 
-def distinct_type_counter_v2(events: DataFrame) -> DataFrame:
-    """State-v2 twin of :func:`distinct_type_counter` on Spark 4's
-    ``transformWithStateInPandas`` (typed state handles, timers,
-    TTL-capable). GATED: the v2 runtime speaks protobuf to the state
-    server and this environment ships no ``google.protobuf`` (and no
-    package installs — the gate is PERMANENT here, not a TODO) — the
-    import-try raises a clear error instead of a worker crash; the
-    applyInPandasWithState form (q77/q78) is the portable,
-    driver-verified default. The gate itself is CI-pinned in BOTH
-    regimes: test_distinct_type_counter_v2_gated_or_equivalent runs
-    un-skipped, asserting this exact ImportError where protobuf is
-    absent and v1/v2 output equivalence where it exists."""
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as e:  # pragma: no cover - env-dependent
-        raise ImportError(
-            "transformWithStateInPandas requires protobuf; use "
-            "distinct_type_counter (applyInPandasWithState) instead"
-        ) from e
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class _DistinctTypes(StatefulProcessor):
-        def init(self, handle):
-            self._types = handle.getValueState("types", "types ARRAY<STRING>")
-
-        def handleInputRows(self, key, rows, timer_values):
-            seen = set(
-                self._types.get()[0] if self._types.exists() else []
-            )
-            for pdf in rows:
-                if len(pdf):
-                    seen.update(pdf["event_type"].dropna().unique().tolist())
-            self._types.update((sorted(seen),))
-            yield pd.DataFrame(
-                {
-                    "user_id": pd.Series([key[0]], dtype="int64"),
-                    "n_types": pd.Series([len(seen)], dtype="int64"),
-                }
-            )
-
-        def close(self):
-            pass
-
-    return (
-        events.select("user_id", "event_type")
-        .filter(F.col("user_id").isNotNull())
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            _DistinctTypes(),
-            outputStructType=DISTINCT_OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
 # --------------------------------------------------------------------------
 # Streaming incremental near-dup gate (the q66 loop as a real stream)
 # --------------------------------------------------------------------------
@@ -540,7 +484,7 @@ def incremental_neardup_stream(
     docs = _table(spark, docs_dir, "documents").filter(
         F.col("doc_id") % 8 == 0
     )
-    shingles = TX.distinct_tokens(F.col("text"))
+    shingles = TX.distinct_tokens("text")
     cuts = _arrival_cuts(docs, "doc_id", n_arrival_files)
     if cuts is None:
         # empty slice: the batch twin over nothing — an empty pairs frame
@@ -684,7 +628,7 @@ def quality_gate_stream(
         part.coalesce(1).write.parquet(os.path.join(tmp, f"arrival={i}"))
         lo = hi
 
-    shingles = TX.distinct_tokens(F.col("text"))
+    shingles = TX.distinct_tokens("text")
     state: dict = {
         "seen": existing,
         "index": DD.band_index(existing, "doc_id", shingles).localCheckpoint(
@@ -717,12 +661,12 @@ def quality_gate_stream(
             TX.ngram_shingles(F.col("text"), 3),
             TX.ngram_shingles(F.col("text"), 3),
         ).select("doc_id", "contamination")
-        n_tok = F.size(TX.tokens(F.col("text")))
+        n_tok = F.size(TX.tokens("text"))
         flags = (
             batch.select(
                 "doc_id",
                 F.when(
-                    (TX.quality_score(F.col("text")) >= 0.3) & (n_tok >= 5), 1
+                    (TX.quality_score("text") >= 0.3) & (n_tok >= 5), 1
                 )
                 .otherwise(0)
                 .cast("long")

@@ -54,17 +54,37 @@ def test_prev_round_minima_reads_newest_bench_artifact():
     assert "q01_pricing_summary" in prev
 
 
-def test_prev_round_minima_excludes_current_round_artifact():
+def test_prev_round_minima_excludes_current_round_artifact(tmp_path, monkeypatch):
     """r10 ADVICE: once the driver writes BENCH_r{N}.json mid-round,
     later bench runs in round N must NOT self-compare (lo > 2*lo is
     never true — the contamination reference would silently die).
     The active round comes from window_history.json; artifacts with
-    N >= it are skipped."""
+    N >= it are skipped. Runs against a temporary repo root holding
+    the window history and the newest eligible artifact, so the
+    outcome does not depend on which artifacts the checkout carries."""
+    import re
+    import shutil
+
+    real_cur = bench._current_round()
+    artifacts = {
+        int(m.group(1)): name
+        for name in os.listdir(bench.REPO)
+        if (m := re.fullmatch(r"BENCH_r(\d+)\.json", name))
+    }
+    plans = tmp_path / "cardano_spark" / "plans"
+    plans.mkdir(parents=True)
+    shutil.copy(
+        os.path.join(bench.REPO, "cardano_spark", "plans", "window_history.json"),
+        plans / "window_history.json",
+    )
+    newest = artifacts[max(n for n in artifacts if n < real_cur)]
+    shutil.copy(os.path.join(bench.REPO, newest), tmp_path / newest)
+    monkeypatch.setattr(bench, "REPO", str(tmp_path))
+
     cur = bench._current_round()
     assert isinstance(cur, int) and cur >= 2, (
         "window_history.json must carry the active round"
     )
-    import re
 
     prev_rounds = [
         int(m.group(1))

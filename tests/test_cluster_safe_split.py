@@ -19,7 +19,7 @@ def test_cluster_safe_split_has_zero_leaking_pairs(spark):
     assign = q137_cluster_safe_split(spark, SF_SMALL)
     d = table(spark, SF_SMALL, "documents")
     pairs = DD.minhash_lsh_pairs(
-        d, "doc_id", TX.distinct_tokens(F.col("text")), threshold=0.8
+        d, "doc_id", TX.distinct_tokens("text"), threshold=0.8
     )
     leaks = (
         pairs.join(

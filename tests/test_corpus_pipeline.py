@@ -122,7 +122,7 @@ def test_quality_gate_uses_shared_formula(spark):
     direct = {
         r.doc_id: r.q
         for r in spark.read.parquet(f"{SF_SMALL}/documents.parquet")
-        .select("doc_id", TX.quality_score(F.col("text")).alias("q"))
+        .select("doc_id", TX.quality_score("text").alias("q"))
         .collect()
     }
     assert q30 == direct
@@ -243,7 +243,7 @@ def test_build_corpus_cluster_safe_split_zero_leak(spark, tmp_path):
     pairs = DD.minhash_lsh_pairs(
         exported,
         "doc_id",
-        TX.distinct_tokens(F.coalesce(F.col("text"), F.lit(""))),
+        TX.distinct_tokens("coalesce(text, '')"),
         threshold=0.95,
     )
     leaks = (
@@ -668,7 +668,7 @@ def test_build_corpus_incremental_retraction_e2e(spark, tmp_path):
         "left_semi",
     ).withColumn(
         "_shard_key",
-        md5_long(F.concat(F.lit("corpus|"), F.col("doc_id").cast("string"))),
+        md5_long("concat('corpus|', CAST(doc_id AS STRING))"),
     )
     write_training_shards_incremental(
         retracted_corpus, full_dest, "_shard_key", 4
@@ -869,7 +869,7 @@ def test_build_corpus_incremental_retraction_cut_mode_e2e(
         )
     final_corpus = final_corpus.withColumn(
         "_shard_key",
-        md5_long(F.concat(F.lit("corpus|"), F.col("doc_id").cast("string"))),
+        md5_long("concat('corpus|', CAST(doc_id AS STRING))"),
     )
     write_training_shards_incremental(
         final_corpus, full_dest, "_shard_key", 4

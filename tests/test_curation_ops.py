@@ -73,7 +73,7 @@ def test_pack_sequences_prefix_sum_and_no_global_window(spark):
         [(i, "w " * (i % 7 + 1)) for i in range(100)],
         "doc_id long, text string",
     ).repartition(8)  # scrambled input partitioning
-    n = F.size(TX.tokens(F.col("text")))
+    n = F.size(TX.tokens("text"))
     out = CU.pack_sequences(docs, "doc_id", n, budget=10, range_partitions=4)
     rows = {r.doc_id: r for r in out.collect()}
     # reference prefix sum on the driver
@@ -97,7 +97,7 @@ def test_pack_sequences_prefix_sum_and_no_global_window(spark):
 def test_pack_sequences_empty_input(spark):
     empty = spark.createDataFrame([], "doc_id long, text string")
     out = CU.pack_sequences(
-        empty, "doc_id", F.size(TX.tokens(F.col("text"))), budget=10
+        empty, "doc_id", F.size(TX.tokens("text")), budget=10
     )
     assert out.count() == 0
     assert out.columns == ["doc_id", "n_tokens", "seq_id", "seq_offset"]
@@ -189,7 +189,7 @@ def test_curation_invariants_random(spark):
     budget = 17
     packed = sorted(
         CU.pack_sequences(
-            docs, "doc_id", F.size(TX.tokens(F.col("text"))), budget,
+            docs, "doc_id", F.size(TX.tokens("text")), budget,
             range_partitions=5,
         ).collect(),
         key=lambda r: r.doc_id,
@@ -315,7 +315,7 @@ def test_pack_sequences_broadcast_offset_join_at_512_partitions(spark):
         [(i, "w " * (i % 5 + 1)) for i in range(2000)],
         "doc_id long, text string",
     ).repartition(16)
-    n = F.size(TX.tokens(F.col("text")))
+    n = F.size(TX.tokens("text"))
     t0 = time.monotonic()
     out = CU.pack_sequences(docs, "doc_id", n, budget=64, range_partitions=512)
     rows = {r.doc_id: r for r in out.collect()}
@@ -647,7 +647,7 @@ def test_length_batch_report_reference_and_no_global_window(spark):
     length-sort property that bounds padding)."""
     rows = [(i, "w " * (i % 13 + 1) + "end") for i in range(60)]
     docs = spark.createDataFrame(rows, "doc_id long, text string").repartition(7)
-    n = F.size(TX.tokens(F.col("text")))
+    n = F.size(TX.tokens("text"))
     out = sorted(
         CU.length_batch_report(docs, "doc_id", n, budget=16,
                                range_partitions=4).collect(),
@@ -695,7 +695,7 @@ def test_bm25_prf_reaches_vocabulary_only_doc(spark):
         (6, "database index scan plan"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    toks = TX.tokens(F.col("text"))
+    toks = TX.tokens("text")
     probe = spark.createDataFrame([("apple",)], "term string")
     base = {
         r.doc_id

@@ -23,7 +23,7 @@ def no_docs(spark):
 
 
 def test_dedup_operators_on_empty_corpus(spark, no_docs):
-    sh = TX.distinct_tokens(F.col("text"))
+    sh = TX.distinct_tokens("text")
     assert DD.exact_dedup_groups(no_docs, "doc_id", "text").count() == 0
     assert DD.minhash_lsh_pairs(no_docs, "doc_id", sh, threshold=0.5).count() == 0
     for strategy in ("prefix", "count"):
@@ -33,7 +33,7 @@ def test_dedup_operators_on_empty_corpus(spark, no_docs):
             ).count()
             == 0
         )
-    fp = DD.simhash(DD.md5_long_arr(sh))
+    fp = DD.simhash(DD.md5_long_arr_sexpr(TX.distinct_tokens_sexpr("text")))
     assert DD.simhash_pairs(no_docs, "doc_id", fp, max_hamming=8).count() == 0
 
 
@@ -166,7 +166,7 @@ def test_round6_session2_operators_on_empty_inputs(spark, no_docs):
     ).collect()
     assert len(rows) == 5 and all(r.contaminated == 0 for r in rows)
 
-    n = F.size(TX.tokens(F.coalesce(F.col("text"), F.lit(""))))
+    n = F.size(TX.tokens("coalesce(text, '')"))
     assert CU.length_batch_report(no_docs, "doc_id", n, budget=16).count() == 0
 
     # empty arrival batch: report intact, zero growth everywhere
@@ -183,6 +183,6 @@ def test_round6_session2_operators_on_empty_inputs(spark, no_docs):
     # PRF with an empty term frame: no matches either pass -> empty
     terms = spark.createDataFrame([], "term string")
     assert (
-        CU.bm25_prf_topk(d, "doc_id", TX.tokens(F.col("text")), terms).count()
+        CU.bm25_prf_topk(d, "doc_id", TX.tokens("text"), terms).count()
         == 0
     )

@@ -101,7 +101,7 @@ def test_lsh_bucket_sexpr_matches_column_branch_default_planes(spark):
         .selectExpr(f"{arr} AS v")
         .select(
             F.expr(lsh_bucket_sexpr("v")).alias("txt"),
-            lsh_bucket(F.col("v")).alias("col"),
+            lsh_bucket("v").alias("col"),
         )
         .first()
     )
@@ -115,7 +115,7 @@ def test_md5_long_sexpr_pinned(spark):
         spark.range(1)
         .select(
             F.expr(md5_long_sexpr("'hello'")).alias("t"),
-            md5_long(F.lit("hello")).alias("c"),
+            md5_long("'hello'").alias("c"),
         )
         .first()
     )
@@ -129,7 +129,7 @@ def test_minhash_sig_sexpr_pinned(spark):
         .selectExpr("array(7L, 13L, 29L) AS h")
         .select(
             F.expr(minhash_sig_sexpr("h", 3, 11)).alias("t"),
-            minhash_sig(F.col("h"), 3, 11).alias("c"),
+            minhash_sig("h", 3, 11).alias("c"),
         )
         .first()
     )
@@ -143,7 +143,7 @@ def test_simhash_sexpr_pinned(spark):
         .selectExpr("array(5L, 3L, 7L) AS h")
         .select(
             F.expr(simhash_sexpr("h")).alias("t"),
-            simhash(F.col("h")).alias("c"),
+            simhash("h").alias("c"),
         )
         .first()
     )

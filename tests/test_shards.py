@@ -15,7 +15,7 @@ from tests.conftest import SF_SMALL
 def _docs_with_key(spark):
     d = table(spark, SF_SMALL, "documents").select("doc_id", "text")
     return d.withColumn(
-        "shard_key", md5_long(F.concat(F.lit("shard|"), F.col("doc_id").cast("string")))
+        "shard_key", md5_long("concat('shard|', CAST(doc_id AS STRING))")
     )
 
 
@@ -410,7 +410,7 @@ def test_write_training_shards_jsonl(spark, tmp_path):
 
     src = spark.read.parquet(f"{SF_SMALL}/documents.parquet").withColumn(
         "_shard_key",
-        md5_long(F.concat(F.lit("shard|"), F.col("doc_id").cast("string"))),
+        md5_long("concat('shard|', CAST(doc_id AS STRING))"),
     )
     jdest, pdest = str(tmp_path / "jsonl"), str(tmp_path / "parquet")
     jm = write_training_shards(src, jdest, "_shard_key", 4, fmt="jsonl")

@@ -26,7 +26,7 @@ def _hll_estimate(spark, ids: list[int]) -> float:
     )
 
     df = spark.createDataFrame([(i,) for i in ids], "user_id long")
-    h = md5_long(F.col("user_id").cast("string"))
+    h = md5_long("CAST(user_id AS STRING)")
     rem = h.bitwiseAND(F.lit(_HLL_REM_MASK))
     w = F.when(rem == 0, F.lit(1).cast("long")).otherwise(
         shl1(F.length(F.bin(rem)))

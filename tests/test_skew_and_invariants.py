@@ -55,7 +55,7 @@ def test_jaccard_invariants_random(spark):
         docs.withColumn("blk", F.lit(1)),
         "doc_id",
         "blk",
-        TX.distinct_tokens(F.col("text")),
+        TX.distinct_tokens("text"),
         threshold=0.0,
     ).collect()
     assert len(pairs) == 60 * 59 // 2  # threshold 0 keeps every pair
@@ -70,7 +70,7 @@ def test_jaccard_strategies_are_lossless_for_positive_threshold(spark):
     # (t<=0 fallback) keeps above the threshold
     docs = spark.createDataFrame(_random_docs(60, seed=11), "doc_id long, text string")
     blk = docs.withColumn("blk", F.lit(1))
-    sh = TX.distinct_tokens(F.col("text"))
+    sh = TX.distinct_tokens("text")
     t = 0.15
     naive = DD.ngram_jaccard_pairs(blk, "doc_id", "blk", sh, threshold=0.0).filter(
         F.col("jaccard") >= t
@@ -90,7 +90,7 @@ def test_minhash_est_prefilter_semantics(spark):
     (any band collision already agrees on 8 of 16 sig components);
     1.0 keeps only pairs whose FULL signatures agree — a subset."""
     docs = spark.createDataFrame(_random_docs(50, seed=3), "doc_id long, text string")
-    sh = TX.distinct_tokens(F.col("text"))
+    sh = TX.distinct_tokens("text")
     base = sorted(
         (r.id_a, r.id_b)
         for r in DD.minhash_lsh_pairs(docs, "doc_id", sh, threshold=0.3).collect()
@@ -118,7 +118,7 @@ def test_simhash_depends_on_set_not_order(spark):
         "doc_id long, text string",
     )
     fp = df.select(
-        "doc_id", DD.simhash(DD.md5_long_arr(TX.distinct_tokens(F.col("text")))).alias("fp")
+        "doc_id", DD.simhash(DD.md5_long_arr_sexpr(TX.distinct_tokens_sexpr("text"))).alias("fp")
     )
     vals = {r.doc_id: r.fp for r in fp.collect()}
     assert vals[1] == vals[2]
@@ -133,7 +133,7 @@ def test_rolling_fingerprint_is_order_sensitive(spark):
     )
     fp = df.select(
         "doc_id",
-        rolling_fingerprint(DD.md5_long_arr(TX.tokens(F.col("text")))).alias("fp"),
+        rolling_fingerprint(DD.md5_long_arr(TX.tokens_sexpr("text"))).alias("fp"),
     )
     vals = {r.doc_id: r.fp for r in fp.collect()}
     assert vals[1] != vals[2]

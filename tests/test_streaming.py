@@ -568,47 +568,6 @@ def test_distinct_type_counter_state_across_microbatches(spark, two_file_events_
     assert out.count() > len(final)
 
 
-def test_distinct_type_counter_v2_gated_or_equivalent(spark, two_file_events_dir):
-    """State-v2 API (transformWithStateInPandas): equivalent to the
-    v1 operator where the protobuf runtime exists; a clear gate error
-    where it doesn't (this container ships no google.protobuf)."""
-    import pytest
-
-    from cardano_spark.streaming.jobs import (
-        distinct_type_counter_v2,
-        events_raw_schema,
-        normalize_event_ts,
-        run_to_memory,
-    )
-
-    raw = (
-        spark.readStream.schema(events_raw_schema(two_file_events_dir))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{two_file_events_dir}/*.parquet")
-    )
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        with pytest.raises(ImportError, match="protobuf"):
-            distinct_type_counter_v2(normalize_event_ts(raw))
-        return
-    out = run_to_memory(
-        distinct_type_counter_v2(normalize_event_ts(raw)), "update"
-    )
-    import pyspark.sql.functions as F
-
-    final = out.groupBy("user_id").agg(F.max("n_types").alias("n_types"))
-    batch = (
-        spark.read.parquet(f"{two_file_events_dir}/*.parquet")
-        .filter(F.col("user_id").isNotNull())
-        .groupBy("user_id")
-        .agg(F.count_distinct("event_type").alias("n_types"))
-    )
-    assert sorted(map(tuple, final.collect())) == sorted(
-        map(tuple, batch.collect())
-    )
-
-
 def test_incremental_neardup_stream_converges(spark):
     """Batching-invariance: the union of microbatch outputs equals
     the batch LSH pair set for ANY arrival split (1, 3, and 5
@@ -624,7 +583,7 @@ def test_incremental_neardup_stream_converges(spark):
     batch = {
         (r.id_a, r.id_b): r.jaccard
         for r in DD.minhash_lsh_pairs(
-            d, "doc_id", TX.distinct_tokens(F.col("text")), threshold=0.8
+            d, "doc_id", TX.distinct_tokens("text"), threshold=0.8
         ).collect()
     }
     for n_files in (1, 3, 5):

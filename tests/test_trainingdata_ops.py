@@ -36,7 +36,7 @@ def test_exact_dedup_groups(docs):
 
 def test_minhash_lsh_finds_planted_neardup(docs):
     pairs = DD.minhash_lsh_pairs(
-        docs, "doc_id", TX.distinct_tokens(F.col("text")), threshold=0.8
+        docs, "doc_id", TX.distinct_tokens("text"), threshold=0.8
     ).collect()
     found = {(r.id_a, r.id_b) for r in pairs}
     assert (1, 2) in found  # identical docs always collide
@@ -48,7 +48,7 @@ def test_minhash_lsh_finds_planted_neardup(docs):
 
 
 def test_simhash_identical_and_distant(docs):
-    hashes = DD.md5_long_arr(TX.distinct_tokens(F.col("text")))
+    hashes = DD.md5_long_arr_sexpr(TX.distinct_tokens_sexpr("text"))
     fp = docs.select("doc_id", DD.simhash(hashes).alias("fp"))
     vals = {r.doc_id: r.fp for r in fp.collect()}
     assert vals[1] == vals[2]
@@ -59,7 +59,7 @@ def test_simhash_identical_and_distant(docs):
 
 
 def test_simhash_pairs_blocking(docs):
-    hashes = DD.md5_long_arr(TX.distinct_tokens(F.col("text")))
+    hashes = DD.md5_long_arr_sexpr(TX.distinct_tokens_sexpr("text"))
     withfp = docs.select("doc_id", DD.simhash(hashes).alias("fp"))
     pairs = DD.simhash_pairs(withfp, "doc_id", F.col("fp"), max_hamming=8)
     found = {(r.id_a, r.id_b): r.hamming for r in pairs.collect()}
@@ -155,7 +155,7 @@ def test_neardup_lsh_prefilter_bounds_candidates(spark):
         e, "vec_id", "embedding", "label", k=10**9, lsh_prefilter=True
     ).count()
     bucketed = e.select(
-        F.col("label"), SIM.lsh_bucket(SIM.as_double(F.col("embedding"))).alias("b")
+        F.col("label"), SIM.lsh_bucket("CAST(embedding AS ARRAY<DOUBLE>)").alias("b")
     ).groupBy("label", "b").count()
     want = bucketed.select(
         F.sum(F.col("count") * (F.col("count") - 1) / 2).cast("long").alias("s")
@@ -350,7 +350,7 @@ def test_lsh_bucket_groups_similar_vectors(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     b = df.select(
-        "vec_id", SIM.lsh_bucket(SIM.as_double(F.col("embedding"))).alias("bucket")
+        "vec_id", SIM.lsh_bucket("CAST(embedding AS ARRAY<DOUBLE>)").alias("bucket")
     )
     vals = {r.vec_id: r.bucket for r in b.collect()}
     assert vals[0] == vals[1]
@@ -464,7 +464,7 @@ def test_language_id_scores_real_english(spark):
         [(1, "xx", "the cat is on the mat and it is happy")],
         "doc_id long, lang string, text string",
     )
-    toks = TX.tokens(F.col("text"))
+    toks = TX.tokens_sexpr("text")
     hits = df.select(
         *[TX.stopword_hits(toks, lg).alias(lg) for lg in TX.LANGS]
     ).collect()[0]
@@ -541,7 +541,7 @@ def test_incremental_minhash_matches_full_recompute(docs):
     for both the derive-index-inline and persisted-index paths."""
     existing = docs.filter(F.col("doc_id") <= 3)
     new = docs.filter(F.col("doc_id") > 3)
-    sh = TX.distinct_tokens(F.col("text"))
+    sh = TX.distinct_tokens("text")
 
     full = {
         (r.id_a, r.id_b, r.jaccard)
@@ -579,7 +579,7 @@ def test_incremental_minhash_index_roundtrips_through_merge_sink(docs, tmp_path,
 
     existing = docs.filter(F.col("doc_id") <= 3)
     new = docs.filter(F.col("doc_id") > 3)
-    sh = TX.distinct_tokens(F.col("text"))
+    sh = TX.distinct_tokens("text")
     idx = DD.band_index(existing, "doc_id", sh)
 
     schema = T.StructType(
@@ -806,7 +806,7 @@ def test_document_chunks_reconstruction_property(spark):
     import pyspark.sql.functions as F
 
     from cardano_spark.functions import text as TX
-    toks = TX.tokens(F.coalesce(F.col("text"), F.lit("")))
+    toks = TX.tokens("coalesce(text, '')")
     n = F.size(toks)
     starts = F.sequence(F.lit(0), F.greatest(n - 1, F.lit(0)), F.lit(step))
     e = df.select(
@@ -1066,7 +1066,7 @@ def test_minhash_estimate_report_planted(docs):
     out = {
         (r.id_a, r.id_b): r
         for r in DD.minhash_estimate_report(
-            docs, "doc_id", TX.distinct_tokens(F.col("text"))
+            docs, "doc_id", TX.distinct_tokens("text")
         ).collect()
     }
     assert (1, 2) in out
@@ -1796,7 +1796,7 @@ def test_cross_source_matrix_properties(spark):
     assert rows
     d = table(spark, SF_SMALL, "documents")
     n_pairs = DD.minhash_lsh_pairs(
-        d, "doc_id", TX.distinct_tokens(F.col("text")), threshold=0.8
+        d, "doc_id", TX.distinct_tokens("text"), threshold=0.8
     ).count()
     assert sum(r.n_pairs for r in rows) == n_pairs
     for r in rows:
@@ -2175,7 +2175,7 @@ def test_bm25_scores_reference_and_properties(spark):
     out = {
         r.doc_id: r
         for r in CU.bm25_scores(
-            frame, "doc_id", TX.tokens(F.col("text")), terms
+            frame, "doc_id", TX.tokens("text"), terms
         ).collect()
     }
 
@@ -2545,7 +2545,7 @@ def test_dedup_aware_pps_mass_and_budget(spark):
         for r in table(spark, SF_SMALL, "documents")
         .select(
             "doc_id",
-            F.size(TX.tokens(F.coalesce(F.col("text"), F.lit("")))).alias("n"),
+            F.size(TX.tokens("coalesce(text, '')")).alias("n"),
         )
         .collect()
     }
@@ -2974,7 +2974,7 @@ def test_minhash_lsh_pairs_banding_param_identity(spark):
     from tests.conftest import SF_SMALL
 
     d = table(spark, SF_SMALL, "documents").filter(F.col("doc_id") % 8 == 0)
-    sh = TX.distinct_tokens(F.col("text"))
+    sh = TX.distinct_tokens("text")
     a = DD.minhash_lsh_pairs(d, "doc_id", sh, threshold=0.8)
     b = DD.minhash_lsh_pairs(
         d, "doc_id", sh, threshold=0.8, bands=2, rows_per_band=8
@@ -3726,7 +3726,7 @@ def test_three_level_fine_gate_shuffle_join_value_neutral(spark):
     v = e.select(
         F.col("vec_id").alias("vid"),
         SIM.as_double(F.col("embedding")).alias("v"),
-    ).withColumn("vn", SIM.norm(F.col("v")))
+    ).withColumn("vn", SIM.norm("v"))
     seeds = v.filter(F.col("vid") < 32).select(
         F.col("vid").alias("cid"), F.col("v").alias("cv")
     )
